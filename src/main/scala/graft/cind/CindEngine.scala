@@ -4,6 +4,7 @@ import graft.core.{Capture, ConditionCodes, SortedOps}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** One capture's co-occurrence evidence from a single join line. */
 final case class CindEvidence(dep: Capture, refs: Array[Capture])
@@ -573,12 +574,12 @@ object CindEngine {
         .agg(collect_set(struct(col("code"), col("v1"), col("v2"))).as("caps"))
         .drop("jh")
         .persist()
-      // no eager count: the next consumer is dictWithIds' zipWithIndex
-      // size probe — a SINGLE sequential job that fills this cache on the
-      // way; every later reader (encode, supports, fallback explode) runs
-      // after dict.count(), so nothing races an unfilled cache. (The
-      // strategies' own lines.count() calls stay — THEIR next consumers
-      // are parallel AQE stage materializations.)
+      // no eager count: the next reader is dictWithIds' runJob size probe,
+      // ONE sequential job that fills this cache on the way, so nothing
+      // later races an unfilled cache. The persisted `dict` is filled by
+      // the dictionary collect in the broadcast regime, and by the first
+      // lines job in the shuffle regime. A strategy's lines.count() runs
+      // only when its persist valve (persistEncodedLines) resolves true.
       // 3. Capture supports from the cached lines: each line is one DISTINCT
       //    join value, so explode+count == count_distinct(join_val).
       val grouped = lines0.select(explode(col("caps")).as("c"))
@@ -757,9 +758,9 @@ object CindEngine {
     * (reference AssignJoinLineRebalancing, operators/AssignJoinLine
     * Rebalancing.scala:16-71): hub lines otherwise serialize one task on
     * O(w^2) work. Each slice re-emits the full ids array with a dep
-    * sub-range; the tiny replicated set is round-robined so slices of one
-    * hub land on different cores. Results are identical with or without
-    * splitting (co-occurrence counting is emission-order-insensitive). */
+    * sub-range; `pairKeys` notes where the slices run. Results are
+    * identical with or without splitting (co-occurrence counting is
+    * emission-order-insensitive). */
   val SplitThreshold = 1024
 
   /** Directed co-occurrence counts over encoded join lines:
@@ -778,7 +779,12 @@ object CindEngine {
     val wide = lines.filter(size(col("ids")) > splitThreshold)
       .select(col("ids"), explode(sequence(lit(0),
         floor((size(col("ids")) - 1) / lit(splitThreshold)).cast("int"))).as("slice"))
-      .repartition() // round-robin the few replicated hub slices
+      // unnumbered, so AQE coalesces it: on a small input every hub slice
+      // lands in ONE task (hub-cind seed 42, local[4]: 1409 ms against
+      // 268-311 ms per narrow task). A numbered round-robin splits that
+      // task but spreads a dep range's pairs over tasks and grows the
+      // pair shuffle (ROADMAP direction B)
+      .repartition()
       .select(explode(slice(col("ids"), col("slice") * splitThreshold + 1,
         lit(splitThreshold))).as("dep"), col("ids"))
     narrow.unionAll(wide)
@@ -1556,59 +1562,45 @@ object CindEngine {
     *       CIND to the same ref, or
     *   (b) its ref is unary and the same dep has a CIND to a binary ref
     *       whose sub-capture equals this ref.
-    * Expressed as four broadcast left-anti equi-joins (the CIND set is small
-    * relative to the input data). */
+    * One job collects the evidence — the unary-dep CINDs for (a), each
+    * binary-ref CIND keyed by both unary sub-captures of its ref for (b) —
+    * into one exact key set, broadcast to one map-side filter. The evidence
+    * is a subset of the CIND set, small relative to the input data. An
+    * uncached input is persisted (the collect fills it, the filter reads
+    * it); either way its cache is released once the result is cached. */
   def minimalCinds(cinds: DataFrame): DataFrame = {
-    // consumed once as probe side and four times as (small) build sides —
-    // persist AND materialize, else the four broadcast exchanges each
-    // recompute the whole discovery lineage on parallel threads
-    val c = cinds.persist()
-    c.count()
-    val depCols = Seq("dep_code", "dep_v1", "dep_v2")
-    val refCols = Seq("ref_code", "ref_v1", "ref_v2")
-
-    // (a) implying CINDs keyed as they would appear with the binary dep
-    def depSub(subCode: Column => Column, subVal: String): DataFrame =
-      c.select(
-        subCode(col("dep_code")).as("dep_code_s"),
-        col(subVal).as("dep_v1_s"),
-        col("ref_code"), col("ref_v1"), col("ref_v2"))
-    // the anti-join keys compare the CANDIDATE's sub-capture to an existing
-    // unary-dep CIND, so build sub keys on the left side instead:
-    def pruneA(df: DataFrame, sub: Column => Column, valCol: String): DataFrame = {
-      val unaryDeps = broadcast(
-        c.filter(col("dep_v2") === "")
-          .select(col("dep_code").as("u_code"), col("dep_v1").as("u_v1"),
-            col("ref_code").as("u_rc"), col("ref_v1").as("u_rv1"), col("ref_v2").as("u_rv2"))
-          .distinct())
-      df.join(unaryDeps,
-        sub(col("dep_code")) === col("u_code") && col(valCol) === col("u_v1") &&
-          col("ref_code") === col("u_rc") && col("ref_v1") === col("u_rv1") &&
-          col("ref_v2") === col("u_rv2"),
-        "left_anti")
+    import ConditionCodes.{firstSubcapture, isBinary, secondSubcapture}
+    val c = if (cinds.storageLevel == StorageLevel.NONE) cinds.persist() else cinds
+    val cols = Seq("dep_code", "dep_v1", "dep_v2", "ref_code", "ref_v1", "ref_v2").map(col)
+    val keys = new java.util.HashSet[String]()
+    c.filter(col("dep_v2") === "" || col("ref_v2") =!= "").select(cols: _*).collect()
+      .foreach { r =>
+        val (dc, dv1, dv2) = (r.getInt(0), r.getString(1), r.getString(2))
+        val (rc, rv1, rv2) = (r.getInt(3), r.getString(4), r.getString(5))
+        if (dv2.isEmpty) keys.add(implicationKey('a', dc, dv1, dv2, rc, rv1, rv2))
+        if (rv2.nonEmpty && isBinary(rc)) {
+          keys.add(implicationKey('b', dc, dv1, dv2, firstSubcapture(rc), rv1, ""))
+          keys.add(implicationKey('b', dc, dv1, dv2, secondSubcapture(rc), rv2, ""))
+        }
+      }
+    val bcast = c.sparkSession.sparkContext.broadcast(keys)
+    val implied = udf { (dc: Int, dv1: String, dv2: String, rc: Int, rv1: String, rv2: String) =>
+      val k = bcast.value
+      (isBinary(dc) &&
+        (k.contains(implicationKey('a', firstSubcapture(dc), dv1, "", rc, rv1, rv2)) ||
+          k.contains(implicationKey('a', secondSubcapture(dc), dv2, "", rc, rv1, rv2)))) ||
+        (rv2.isEmpty && k.contains(implicationKey('b', dc, dv1, dv2, rc, rv1, "")))
     }
-
-    // (b) existing binary-ref CINDs, re-keyed by each unary sub of their ref
-    def pruneB(df: DataFrame, sub: Column => Column, valCol: String): DataFrame = {
-      val binaryRefs = broadcast(
-        c.filter(col("ref_v2") =!= "")
-          .select(col("dep_code").as("b_dc"), col("dep_v1").as("b_dv1"),
-            col("dep_v2").as("b_dv2"),
-            sub(col("ref_code")).as("b_rc"), col(valCol).as("b_rv1"))
-          .distinct())
-      df.join(binaryRefs,
-        col("dep_code") === col("b_dc") && col("dep_v1") === col("b_dv1") &&
-          col("dep_v2") === col("b_dv2") &&
-          col("ref_code") === col("b_rc") && col("ref_v1") === col("b_rv1") &&
-          col("ref_v2") === lit(""),
-        "left_anti")
-    }
-
-    val afterA = pruneA(pruneA(c, firstSubCode, "dep_v1"), secondSubCode, "dep_v2")
-    val out = pruneB(pruneB(afterA, firstSubCode, "ref_v1"), secondSubCode, "ref_v2")
-    // release the input cache once the pruned (still-compact) result holds
-    graft.core.CacheOps.cacheResult(out, Seq(c))
+    graft.core.CacheOps.cacheResult(c.filter(!implied(cols: _*)), Seq(c))
   }
+
+  /** Exact key of one (dep, ref) implication-evidence pair, NUL-separated
+    * as in [[graft.functions.DictEncodeIds.key]] — never a hash, since a
+    * false hit would drop a real CIND. The tag keeps rule (a) and (b) apart. */
+  private def implicationKey(tag: Char, dc: Int, dv1: String, dv2: String,
+      rc: Int, rv1: String, rv2: String): String =
+    tag.toString + "\u0000" + graft.functions.DictEncodeIds.key(dc, dv1, dv2) +
+      "\u0000" + graft.functions.DictEncodeIds.key(rc, rv1, rv2)
 }
 
 /** Per-dependent-capture k-way intersection of sorted ref arrays, counting

@@ -127,6 +127,97 @@ class CindEngineSpec extends SparkSpec {
     assert(minimal.contains((dep, bRef)))
   }
 
+  /** Rules (a) and (b) of [[CindEngine.minimalCinds]] from first
+    * principles, over a CIND multiset; also returns which sub position of
+    * which rule dropped each removed row ("a1", "a2", "b1", "b2"). */
+  def minimalBruteForce(rows: Seq[CindRow]): (Seq[CindRow], Set[String]) = {
+    def caps(r: CindRow) = (Capture(r.dep_code, r.dep_v1, r.dep_v2),
+      Capture(r.ref_code, r.ref_v1, r.ref_v2))
+    val pairs = rows.map(caps).toSet
+    def firing(r: CindRow): Set[String] = {
+      val (dep, ref) = caps(r)
+      val a = if (!dep.isBinary) Set.empty[String] else
+        Set("a1" -> dep.firstSub, "a2" -> dep.secondSub)
+          .collect { case (t, sub) if pairs((sub, ref)) => t }
+      val b = if (!ref.isUnary) Set.empty[String] else
+        pairs.toSeq.flatMap { case (d, bin) =>
+          if (d != dep || !bin.isBinary) Nil
+          else Seq("b1" -> bin.firstSub, "b2" -> bin.secondSub)
+            .collect { case (t, sub) if sub == ref => t }
+        }.toSet
+      a ++ b
+    }
+    val fired = rows.map(r => r -> firing(r))
+    (fired.collect { case (r, f) if f.isEmpty => r }, fired.flatMap(_._2).toSet)
+  }
+
+  test("minimalCinds equals the brute-force rules on random CIND sets (cached and uncached)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val values = Seq("x", "y")
+    def capture(): Capture = {
+      val code = ConditionCodes.allCaptures(rnd.nextInt(ConditionCodes.allCaptures.length))
+      Capture(code, values(rnd.nextInt(values.size)),
+        if (ConditionCodes.isBinary(code)) values(rnd.nextInt(values.size)) else "")
+    }
+    def row(): CindRow = {
+      val (d, r) = (capture(), capture())
+      CindRow(d.code, d.v1, d.v2, r.code, r.v1, r.v2, 2L + rnd.nextInt(2))
+    }
+    def sorted(rs: Seq[CindRow]) = rs.map(r => (r.dep_code, r.dep_v1, r.dep_v2,
+      r.ref_code, r.ref_v1, r.ref_v2, r.support)).sorted
+    var fired = Set.empty[String]
+    for (trial <- 1 to 6) {
+      val base = Seq.fill(120)(row())
+      val rows = base ++ base.take(10) // exact duplicate rows survive or drop together
+      val (want, f) = minimalBruteForce(rows)
+      fired ++= f
+      val cached = trial % 2 == 0
+      val input = rows.toDS().toDF()
+      if (cached) { input.persist(); input.count() }
+      val out = CindEngine.minimalCinds(input)
+      val got = out.as[CindRow].collect().toSeq
+      assert(sorted(got) == sorted(want), s"trial $trial (cached=$cached)")
+      assert(input.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      out.unpersist()
+    }
+    // every sub position of both rules fired
+    assert(fired == Set("a1", "a2", "b1", "b2"))
+  }
+
+  test("minimalCinds over a cached CIND set: bounded jobs, no cache left behind") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    spark.catalog.clearCache()
+    val all = CindEngine.allCinds(toDF(tiny), minSupport = 2)
+    val sc = spark.sparkContext
+    val group = "minimalCinds-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val minimal =
+      try {
+        sc.setJobGroup(group, group)
+        try CindEngine.minimalCinds(all.toDF())
+        finally sc.clearJobGroup()
+      } finally {
+        org.apache.spark.ListenerBusDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+    // one evidence collect, then cacheResult's persist + count (cache fill,
+    // shuffle map, result)
+    assert(jobs.get() <= 4, s"minimalCinds ran ${jobs.get()} jobs")
+    assert(minimal.count() > 0)
+    minimal.unpersist()
+    assert(session.sharedState.cacheManager.isEmpty,
+      "a cache entry from the discovery outlived the returned handle")
+  }
+
   test("count-match and intersect strategies agree (cross-strategy invariant)") {
     def key(r: CindRow) = (Capture(r.dep_code, r.dep_v1, r.dep_v2),
       Capture(r.ref_code, r.ref_v1, r.ref_v2), r.support)
